@@ -589,13 +589,22 @@ def link_mentions_coherent(
         "doc_id", "mention_id", "entity_id",
         F.col("score").alias("coh_score"),
     )
+    # the alias dim may hold several (surface, entity) rows differing in
+    # kind/name: keep the highest-scored one, ties to the smallest
+    # (link_kind, canonical_name) — never partition order
+    cols = ["doc_id", "span_idx", "entity_group", "word", "start", "end",
+            "score", "sentence_id", "entity_id", "coh_score"]
     return (
         cands.join(win, ["doc_id", "mention_id", "entity_id"])
-        .dropDuplicates(["mention_id"])
+        .groupBy("mention_id")
+        .agg(F.min(F.struct(
+            (-F.col("link_score")).alias("nls"), "link_kind",
+            "canonical_name", *cols,
+        )).alias("_w"))
         .select(
-            "doc_id", "span_idx", "mention_id", "entity_group", "word",
-            "start", "end", "score", "sentence_id", "entity_id",
-            "link_kind", "canonical_name",
-            F.col("coh_score").alias("link_score"),
+            "_w.doc_id", "_w.span_idx", "mention_id", "_w.entity_group",
+            "_w.word", "_w.start", "_w.end", "_w.score", "_w.sentence_id",
+            "_w.entity_id", "_w.link_kind", "_w.canonical_name",
+            F.col("_w.coh_score").alias("link_score"),
         )
     )

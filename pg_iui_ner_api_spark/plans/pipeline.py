@@ -5,6 +5,13 @@
        linked  ──canonicalize──> components, nodes    (iterative CC)
        linked + predicates ──assemble──> edges        (co-keyed joins)
 
+Canonicalization is entity-sized: ``components`` holds one
+``(entity_id, node, component)`` row per distinct linked entity, and
+``nodes`` is voted from per-entity counts over it — the same helpers
+(operators/components.py) the incremental compactor
+(streaming/jobs.py::compact_kg_nodes) folds deltas through, so the two
+paths cannot drift apart.
+
 Partitioning contract: one explicit doc_id hash partitioning
 (north_rule), placed AFTER the map-only linking stage — extraction and
 linking are both map-only, so the first exchange the corpus ever sees

@@ -368,7 +368,8 @@ def compact_kg_nodes(
 
     inc_dir = f"{workdir}/linked_inc"
     batch_ids = sorted(
-        int(d.split("=", 1)[1]) for d in os.listdir(inc_dir)
+        int(d.split("=", 1)[1])
+        for d in (os.listdir(inc_dir) if os.path.isdir(inc_dir) else [])
         if d.startswith("batch=")
     )
     state_dir = f"{workdir}/compact_state"
@@ -378,18 +379,19 @@ def compact_kg_nodes(
         with open(meta_path) as f:
             meta = json.load(f)
     new_ids = [b for b in batch_ids if meta is None or b > meta["last_batch"]]
-    if meta is not None and not new_ids:
+    if not new_ids:
+        if meta is None:
+            raise ValueError(
+                f"compact_kg_nodes: no linked batches under {inc_dir} "
+                "and no prior compaction state to return"
+            )
         return spark.read.parquet(f"{workdir}/nodes")
 
     delta = spark.read.parquet(
         *[f"{inc_dir}/batch={b}" for b in new_ids]
     )
     dv = C.entity_vote_counts(delta)
-    dp = delta.select(
-        "entity_id", F.lower("word").alias("surface")
-    ).distinct()
-    e_node = F.xxhash64(F.concat(F.lit("e:"), F.col("entity_id")))
-    s_node = F.xxhash64(F.concat(F.lit("s:"), F.col("surface")))
+    dp = C.block_pairs(delta)
     if meta is not None:
         v = meta["version"]
         prev_votes = spark.read.parquet(f"{state_dir}/votes/v={v}")
@@ -402,23 +404,11 @@ def compact_kg_nodes(
         )
         new_pairs = dp.join(prev_pairs, ["entity_id", "surface"], "left_anti")
         pairs = prev_pairs.unionByName(new_pairs)
-        delta_edges = new_pairs.select(
-            e_node.alias("u"), s_node.alias("v")
-        )
-        assign = C.incremental_components(prev_assign, delta_edges)
+        assign = C.incremental_components(prev_assign, C.block_edges(new_pairs))
     else:
         votes, pairs = dv, dp
-        assign = C.connected_components(
-            dp.select(e_node.alias("u"), s_node.alias("v"))
-        )
-    ent_comp = (
-        pairs.select("entity_id").distinct()
-        .withColumn("node", e_node)
-        .join(assign, "node", "left")
-        .select(
-            "entity_id", F.coalesce("component", "node").alias("component")
-        )
-    )
+        assign = C.connected_components(C.block_edges(dp))
+    ent_comp = C.entity_components(pairs, assign)
     nodes = C.canonical_nodes_from_votes(votes, ent_comp)
 
     hwm = max(new_ids)

@@ -148,31 +148,96 @@ def test_component_stats_star_vs_sparse(spark):
     assert r["max_degree"] == 4 and r["density"] == 0.4
 
 
-def test_nodes_from_votes_match(spark):
-    """canonical_nodes_from_votes over additive vote counts + the
-    per-entity component map == canonical_nodes over raw mentions —
-    the equality the incremental compactor's node builder rests on."""
-    from pg_iui_ner_api_spark import synth
-    from pg_iui_ner_api_spark.operators import linking as L, ner as N
+def _reference_canonicalization(rows):
+    """Plain-Python, mention-level canonicalization: union-find over the
+    entity<->surface block graph, then per-component votes over the raw
+    mentions with the ``min((-count, value))`` tie-break. Returns
+    ``({entity_id: representative}, {node rows})``."""
+    from collections import Counter, defaultdict
+
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for r in rows:
+        a, b = find(("e", r["entity_id"])), find(("s", r["word"].lower()))
+        parent[max(a, b)] = min(a, b)
+    by_comp = defaultdict(list)
+    for r in rows:
+        by_comp[find(("e", r["entity_id"]))].append(r)
+
+    def vote(ms, col):
+        return min((-c, v) for v, c in Counter(m[col] for m in ms).items())[1]
+
+    rep, nodes = {}, set()
+    for ms in by_comp.values():
+        e = vote(ms, "entity_id")
+        rep.update({m["entity_id"]: e for m in ms})
+        nodes.add((e, vote(ms, "canonical_name"), vote(ms, "link_kind"), len(ms)))
+    return rep, nodes
+
+
+def _check_against_reference(lm):
     from pg_iui_ner_api_spark.operators.components import (
         canonical_components,
         canonical_nodes,
-        canonical_nodes_from_votes,
-        entity_vote_counts,
+        entity_canonical_map,
     )
+
+    rows = lm.select(
+        "entity_id", "word", "canonical_name", "link_kind"
+    ).collect()
+    want_rep, want_nodes = _reference_canonicalization(rows)
+    comps = canonical_components(lm)
+    assert comps.columns == ["entity_id", "node", "component"]
+    assert comps.count() == len(want_rep)
+    got_nodes = {tuple(r) for r in canonical_nodes(lm, comps).collect()}
+    assert got_nodes == want_nodes
+    got_rep = dict(
+        tuple(r) for r in entity_canonical_map(lm, comps).collect()
+    )
+    assert got_rep == want_rep
+
+
+def test_nodes_from_votes_match(spark):
+    """The entity-sized vote path (canonical_components ->
+    canonical_nodes / entity_canonical_map) == a plain-Python
+    mention-level reference over the collected linked mentions."""
+    from pg_iui_ner_api_spark import synth
+    from pg_iui_ner_api_spark.operators import linking as L, ner as N
 
     docs = synth.synth_documents(spark, 120, partitions=4)
     lm = L.link_mentions(
         N.mentions_of(N.extract(docs)), synth.alias_df(spark),
         synth.entity_emb_df(spark),
-    )
-    comps = canonical_components(lm)
-    want = {tuple(r) for r in canonical_nodes(lm, comps).collect()}
-    ent_comp = comps.select("entity_id", "component").distinct()
-    got = {
-        tuple(r)
-        for r in canonical_nodes_from_votes(
-            entity_vote_counts(lm), ent_comp
-        ).collect()
-    }
-    assert got == want
+    ).cache()
+    _check_against_reference(lm)
+    lm.unpersist()
+
+
+def test_canonical_votes_tie_breaks(spark):
+    """Hand-built ties: equal entity counts in one component go to the
+    smallest entity_id, tied canonical_name / link_kind votes to the
+    smallest value — independent of partitioning; a larger count beats
+    a smaller value."""
+    rows = [
+        # component x: E:a and E:b tie 2-2, names tie, kinds tie
+        ("E:b", "X", "Zed", "ORG"),
+        ("E:b", "x", "Zed", "ORG"),
+        ("E:a", "x", "Acme", "PER"),
+        ("E:a", "x", "Acme", "PER"),
+        # component y: E:d outvotes the smaller E:c
+        ("E:c", "y", "Aaa", "LOC"),
+        ("E:d", "y", "Bbb", "LOC"),
+        ("E:d", "Y", "Bbb", "LOC"),
+    ]
+    cols = ["entity_id", "word", "canonical_name", "link_kind"]
+    rep, nodes = _reference_canonicalization([dict(zip(cols, r)) for r in rows])
+    assert nodes == {("E:a", "Acme", "ORG", 4), ("E:d", "Bbb", "LOC", 3)}
+    assert rep == {"E:a": "E:a", "E:b": "E:a", "E:c": "E:d", "E:d": "E:d"}
+    for n_part in (1, 3):
+        lm = spark.createDataFrame(rows, ", ".join(f"{c} string" for c in cols))
+        _check_against_reference(lm.repartition(n_part))

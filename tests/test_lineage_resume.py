@@ -71,6 +71,19 @@ def test_lineage_manifest_contents(spark, tmp_path):
     assert sum(p["rows"] for p in meta["partitions"]) == meta["rows_out"]
 
 
+def test_components_stage_is_entity_sized(spark, tmp_path):
+    """The components stage holds one (entity_id, node, component) row
+    per distinct linked entity — never one row per mention."""
+    wd = str(tmp_path / "wd")
+    docs = synth.synth_documents(spark, N, partitions=2)
+    res = run_kg_pipeline(spark, docs, workdir=wd, input_fingerprint="fp")
+    with open(os.path.join(wd, "_lineage", "components.json")) as f:
+        meta = json.load(f)
+    n_entities = res["linked_mentions"].select("entity_id").distinct().count()
+    assert meta["rows_out"] == n_entities
+    assert res["components"].columns == ["entity_id", "node", "component"]
+
+
 def test_workdir_none_unpersist_releases_caches(spark):
     """ADVICE r1: workdir=None mode persisted MEMORY_AND_DISK and never
     released, accumulating blocks across pipeline runs in one session.

@@ -262,3 +262,35 @@ def test_coherent_linking_drop_in_parity(spark):
     r = tp / max(len(want), 1)
     assert p >= 0.95, f"coherent precision {p:.4f} < 0.95"
     assert r >= 0.95, f"coherent recall {r:.4f} < 0.95"
+
+
+def test_coherent_linking_duplicate_alias_rows_deterministic(spark):
+    """An alias dim holding several (surface, entity) rows that differ
+    in kind/name: the coherent linker keeps the highest-scored row, ties
+    to the smallest (link_kind, canonical_name) — the same winner under
+    any partitioning, never partition order."""
+    from pg_iui_ner_api_spark.operators.linking import link_mentions_coherent
+
+    rows = synth.alias_table()
+    # tie with every original row but sort first; a lower-prior row
+    # that sorts even earlier must still lose on score
+    dups = [(a, e, "AAA", "Dup", p) for a, e, _, _, p in rows]
+    losers = [(a, e, "000", "Low", p - 0.1) for a, e, _, _, p in rows]
+    alias = synth.local_dim_df(
+        spark, rows + dups + losers,
+        ["alias", "entity_id", "kind", "canonical_name", "prior"],
+    )
+    embs = synth.entity_emb_df(spark)
+    docs = synth.synth_documents(spark, 40, partitions=2)
+    m = ner.mentions_of(ner.extract(docs))
+    base = linking.link_mentions(m, synth.alias_df(spark), embs)
+    runs = []
+    for n_part in (1, 4):
+        got = link_mentions_coherent(m.repartition(n_part), alias, embs)
+        runs.append(sorted(
+            (r["mention_id"], r["entity_id"], r["link_kind"], r["canonical_name"])
+            for r in got.collect()
+        ))
+    assert runs[0] == runs[1]
+    assert len(runs[0]) == base.count()
+    assert {(k, n) for _, _, k, n in runs[0]} == {("AAA", "Dup")}

@@ -281,7 +281,7 @@ def test_stream_kg_increment_matches_batch(spark, tmp_path):
     assert spark.read.parquet(f"{wd}/edges_inc").count() == n_after_2
 
     nodes = J.compact_kg_nodes(spark, wd)  # incremental fold of batch 2
-    node_cols = ["entity_id", "canonical_name"]
+    node_cols = ["entity_id", "canonical_name", "kind", "n_mentions"]
     want_nodes = {tuple(r) for r in res["nodes"].select(*node_cols).collect()}
     assert {tuple(r) for r in nodes.select(*node_cols).collect()} == want_nodes
 
@@ -293,6 +293,20 @@ def test_stream_kg_increment_matches_batch(spark, tmp_path):
     full = J.compact_kg_nodes(spark, wd, incremental=False)
     assert {tuple(r) for r in full.select(*node_cols).collect()} == want_nodes
     res["_runner"].unpersist()
+
+
+def test_compact_kg_nodes_without_batches_raises(spark, tmp_path):
+    """No linked batches and no prior state: a clear ValueError naming
+    the directory, for a missing and for an empty ``linked_inc``."""
+    import re
+
+    wd = str(tmp_path / "wd")
+    inc = re.escape(f"{wd}/linked_inc")
+    with pytest.raises(ValueError, match=inc):
+        J.compact_kg_nodes(spark, wd)
+    os.makedirs(f"{wd}/linked_inc")
+    with pytest.raises(ValueError, match=inc):
+        J.compact_kg_nodes(spark, wd)
 
 
 def test_stream_dedup_exact_across_batches(spark, tmp_path):
